@@ -201,8 +201,8 @@ object ValidationQueries {
   def seqDupContent(s: SparkSession, dir: String): DataFrame = {
     // r6: fused codegen join (graft.functions.CsvJoinInts) — byte-
     // identical to concat_ws(",", transform(tokens, x =>
-    // coalesce(cast(x as string), '~'))) under the tokens-not-null
-    // filter below, without materializing ~n_tok boxed strings per row
+    // coalesce(cast(x as string), '~'))), without materializing ~n_tok
+    // boxed strings per row
     val h = md5(graft.functions.CsvJoinInts.csv_join_ints(col("tokens")))
     toks(s, dir)
       .filter(col("tokens").isNotNull)
@@ -290,7 +290,9 @@ object ValidationQueries {
       .withColumnRenamed("pos", "w_idx").withColumnRenamed("col", "w")
   }
 
-  def chunkWindows(s: SparkSession, dir: String): DataFrame = {
+  def chunkWindows(s: SparkSession, dir: String): DataFrame = chunkWindowsOf(toks(s, dir))
+
+  private[graft] def chunkWindowsOf(t: DataFrame): DataFrame = {
     // r6 shape: ONE fused codegen'd per-row pass
     // (graft.functions.WindowStats) instead of posexplode — the old
     // plan materialized one row per window (2.75M at sf0.1), each
@@ -306,17 +308,20 @@ object ValidationQueries {
     // the cross-row DECIMAL accumulation below. A null tokens row has
     // no windows in both shapes (null struct ≡ zero contribution).
     val ws = graft.functions.WindowStats.window_stats(col("tokens"), ChunkW, ChunkS)
-    val m = toks(s, dir).select(col("source"), ws.as("ws"))
+    val m = t.select(col("source"), ws.as("ws"))
     // checksum accumulates in DECIMAL(38,0) — per-window ck is up to
     // ~5e9, so a LONG accumulator wraps within the 10^12-row design
     // scale while DuckDB's sum(BIGINT) is already HUGEINT (the sumCents
     // rule, RelationalQueries). Emitted as the exact digit STRING so
-    // both engines stringify identically reader-independently.
+    // both engines stringify identically reader-independently. A
+    // source whose arrays are all null or empty has no windows, so it
+    // has no row (the oracle groups window rows).
     m.groupBy(col("source")).agg(
       sum(col("ws.n_windows").cast("long")).as("n_windows"),
       sum(col("ws.n_full").cast("long")).as("n_full"),
       sum(col("ws.sum_len")).as("sum_len"),
       sum(col("ws.ck").cast("decimal(38,0)")).cast("string").as("content_checksum"))
+      .filter(col("n_windows") > 0)
   }
 
   /** CONSTRAINT SUGGESTION (the profile->suite direction): derive a

@@ -308,17 +308,10 @@ object ConstraintCompiler {
   /** Add the single-pass TokenStats profile columns for the given
     * array<int> fields. Must be applied to the DataFrame before
     * evaluating columns compiled with the same `fusedIntArrays`.
-    *
-    * A field whose profile column ALREADY EXISTS is left untouched —
-    * that is how alternative storage layouts plug in: e.g. the
-    * packed-binary layout pre-materializes `__prof_tokens` from
-    * token_stats_packed(tokens_bin) and every fused constraint compiles
-    * against it unchanged, no array column required (PackedProbe).
     */
   def withProfiles(df: DataFrame, fusedIntArrays: Set[String]): DataFrame =
     fusedIntArrays.foldLeft(df)((d, f) =>
-      if (d.columns.contains(profCol(f))) d
-      else d.withColumn(profCol(f), graft.functions.TokenStats.token_stats(col(f))))
+      d.withColumn(profCol(f), graft.functions.TokenStats.token_stats(col(f))))
 
   def compile(fc: FieldConstraint, fusedIntArrays: Set[String]): Compiled = {
     val f = col(fc.field)
@@ -631,14 +624,9 @@ object ConstraintCompiler {
     val base = withProfiles(df, fusedIntArrays)
       .select(col(keyField), col(partField), fails.as("_fails"))
     val observed =
-      if (observe == null)
-        // zero-cost optimizer barrier even when the caller wants no
-        // metrics: without a CollectMetrics node between the projection
-        // and the explode, CollapseProject inlines the whole
-        // checks-array chain into the Generate, dropping it out of
-        // codegen (measured 2.9 s → 0.2 s on the analogous n-gram
-        // explode, DocFragProbe r6 — see PipelineQueries.ngBase)
-        base.observe("violations_base", count(lit(1)))
+      // a CollectMetrics node between the checks-array projection and
+      // the explode either way: the caller's Observation, or a Barrier
+      if (observe == null) Barrier(base)
       else base.observe(observe,
         count(lit(1)).as("rows"),
         sum(when(size(col("_fails")) > 0, 1L).otherwise(0L)).as("viol"))

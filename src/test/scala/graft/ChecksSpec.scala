@@ -251,6 +251,19 @@ class ChecksSpec extends SparkSpec {
     assert(got.values.exists(v => v._1 > v._2), "expected some partial windows")
   }
 
+  test("chunk windows: a source with only null or empty arrays has no row") {
+    import spark.implicits._
+    val t = Seq(
+      ("web", Seq[Integer](1, 2, 3)),
+      ("blank", Seq[Integer]()),
+      ("blank", null),
+      ("nulls", null)
+    ).toDF("source", "tokens")
+    val got = ValidationQueries.chunkWindowsOf(t).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got === Map("web" -> 1L))
+  }
+
   test("suggest suite: suggested keywords reproduce the observed profile exactly") {
     val dir = "/root/testdata/sf0.001"
     val got = ValidationQueries.suggestSuite(spark, dir).collect()
