@@ -506,14 +506,10 @@ object PipelineQueries {
   }
 
   /** The curated corpus itself, in the north-star token-table shape:
-    * pipeline survivors tokenized. What [[graft.run.CurateJob]] writes.
-    */
-  def curatedTokens(s: SparkSession, dir: String): DataFrame =
-    curatedTokensWith(s, dir, contamDocIds(s, dir), droppedDocIds(s, dir))
-
-  /** [[curatedTokens]] over pre-computed id frames (see
-    * [[curateLedgerWith]]). The lexer projection materializes `tokens`
-    * FIRST and derives n_tok from the materialized column — the
+    * pipeline survivors tokenized, over pre-computed id frames (see
+    * [[curateLedgerWith]]); what [[graft.run.CurateJob]] writes. The
+    * lexer projection materializes `tokens` FIRST and derives n_tok
+    * from the materialized column — the
     * regexp+md5 lexer is the most expensive per-row expression in the
     * job and must run once, not once per derived column.
     */

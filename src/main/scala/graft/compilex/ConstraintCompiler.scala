@@ -510,73 +510,85 @@ object ConstraintCompiler {
     Compiled(fc.id, p, coalesce(o, lit("null")))
   }
 
+  /** The suite compiled once; every face projects from this list. A
+    * repeated id would make the faces disagree (one flag kept, two
+    * count rows, the first one's paths), so it is rejected.
+    */
+  private def compiled(suite: Suite, fusedIntArrays: Set[String]): Seq[Compiled] = {
+    val fcs = suite.resolved.constraints
+    val ids = fcs.map(_.id)
+    ids.diff(ids.distinct).headOption.foreach(id =>
+      throw new IllegalArgumentException(s"constraint id '$id' repeats in suite '${suite.name}'"))
+    fcs.map(compile(_, fusedIntArrays))
+  }
+
+  /** `array(cs)`, typed even for a zero-constraint suite (a bare
+    * `array()` is VOID-typed); the non-empty array carries no cast.
+    */
+  private def typedArray(cs: Seq[Column], tpe: String): Column =
+    if (cs.isEmpty) array().cast(tpe) else array(cs: _*)
+
   /** Compile a whole suite to a single `checks` column:
     * array<struct<cid,pass,observed>> — ONE projection, one table scan,
     * all constraints (SURVEY.md §4.3.2).
     */
   def checksColumn(suite: Suite): Column = checksColumn(suite, Set.empty)
 
-  def checksColumn(suite: Suite, fusedIntArrays: Set[String]): Column = {
-    val cs = suite.resolved.constraints.map(compile(_, fusedIntArrays))
+  def checksColumn(suite: Suite, fusedIntArrays: Set[String]): Column =
     // observed is computed LAZILY (only on failure): codegen evaluates the
     // when-branch conditionally, so passing rows never pay for the
     // observed-value extraction (e.g. Items' filter() re-scan of the
     // token array) — the single-scan violation capture of SURVEY.md §7.
-    array(cs.map(c => struct(
+    typedArray(compiled(suite, fusedIntArrays).map(c => struct(
       lit(c.id).as("cid"),
       c.pass.as("pass"),
-      when(!c.pass, c.observed).as("observed"))): _*)
-  }
+      when(!c.pass, c.observed).as("observed"))),
+      "array<struct<cid:string,pass:boolean,observed:string>>")
 
   /** Per-constraint fail/total counts in ONE aggregation pass with NO
-    * row explosion: each constraint contributes one conditional-sum
-    * column, and the single result row is stacked to long format
-    * (constraint_id, fails, n_rows). The explode-based alternative
-    * (checksColumn + explode + groupBy) materializes #constraints
-    * structs per row including lazily-built observed strings — measured
-    * 7.2s vs sub-second for 9 constraints on 1M rows. Use this whenever
-    * only counts are needed; use [[violations]] when the per-row stream
-    * is the product.
+    * row explosion: one array of (constraint_id, conditional sum)
+    * structs, exploded from the single result row to (constraint_id,
+    * fails, n_rows). The explode-based alternative (checksColumn +
+    * explode + groupBy) materializes #constraints structs per row
+    * including lazily-built observed strings — measured 7.2s vs
+    * sub-second for 9 constraints on 1M rows. Use this whenever only
+    * counts are needed; use [[violations]] when the per-row stream is
+    * the product.
     */
   def failCounts(df: DataFrame, suite: Suite, fusedIntArrays: Set[String] = Set.empty): DataFrame = {
-    val cs = suite.resolved.constraints.map(compile(_, fusedIntArrays))
-    // a suite whose keywords ALL discharge at compile time has zero row
-    // constraints: zero count rows, not a malformed stack(0) (round-4
-    // review; withVerdicts already documents the same vacuous case)
-    if (cs.isEmpty)
-      return withProfiles(df, fusedIntArrays).agg(count(lit(1)).as("__n"))
-        .select(lit(null).cast("string").as("constraint_id"),
-          lit(null).cast("long").as("fails"), col("__n").as("n_rows"))
-        .filter(lit(false))
-    val aggCols = cs.zipWithIndex.map { case (c, i) =>
-      sum(when(!c.pass, 1L).otherwise(0L)).as(s"__f$i")
-    } :+ count(lit(1)).as("__n")
-    val row = withProfiles(df, fusedIntArrays).agg(aggCols.head, aggCols.tail: _*)
-    // constraint ids are suite-author-controlled strings (arbitrary JSON
-    // property names): escape backslash+quote so a name like
-    // "o'brien.minLength" can't break or inject into the stack() SQL
-    def esc(s: String) = s.replace("\\", "\\\\").replace("'", "\\'")
-    val stacked = cs.zipWithIndex
-      .map { case (c, i) => s"'${esc(c.id)}', __f$i" }.mkString(", ")
-    row.selectExpr(s"stack(${cs.length}, $stacked) AS (constraint_id, fails)", "__n AS n_rows")
+    val fails = compiled(suite, fusedIntArrays).map(c => struct(
+      lit(c.id).as("constraint_id"), sum(when(!c.pass, 1L).otherwise(0L)).as("fails")))
+    withProfiles(df, fusedIntArrays)
+      .agg(typedArray(fails, "array<struct<constraint_id:string,fails:bigint>>").as("__fails"),
+        count(lit(1)).as("n_rows"))
+      .select(inline(col("__fails")), col("n_rows"))
   }
 
   /** df + boolean column per constraint (flat, codegen-friendly) plus a
     * `row_valid` conjunction (≙ is_valid short-circuit AND,
-    * PJS:validators.py:485-500).
+    * PJS:validators.py:485-500). A suite whose keywords all discharge at
+    * compile time (e.g. propertyNames every column name satisfies) has
+    * ZERO row constraints, and every row is vacuously valid.
     */
   def withVerdicts(df: DataFrame, suite: Suite): DataFrame = withVerdicts(df, suite, Set.empty)
 
   def withVerdicts(df: DataFrame, suite: Suite, fusedIntArrays: Set[String]): DataFrame = {
-    val cs = suite.resolved.constraints.map(compile(_, fusedIntArrays))
-    val withCols = cs.foldLeft(withProfiles(df, fusedIntArrays))((d, c) => d.withColumn(c.id, c.pass))
-    // constraint ids contain dots — backtick-quote (doubling embedded
-    // backticks, which arbitrary suite-author property names may carry)
-    // to avoid field-access parsing; a suite whose keywords all
-    // discharge at compile time (e.g. propertyNames every column name
-    // satisfies) has ZERO row constraints and every row is vacuously valid
-    withCols.withColumn("row_valid",
-      cs.map(c => col(s"`${c.id.replace("`", "``")}`")).foldLeft(lit(true))(_ && _))
+    val cs = compiled(suite, fusedIntArrays)
+    // ONE projection: a withColumn per flag re-analyzes the whole plan
+    val flags = withProfiles(df, fusedIntArrays)
+      .withColumns(scala.collection.immutable.ListMap(cs.map(c => c.id -> c.pass): _*))
+    // ids contain dots: backtick-quote, doubling embedded backticks
+    flags.withColumn("row_valid", conjunction(cs.map(c => col(s"`${c.id.replace("`", "``")}`"))))
+  }
+
+  /** AND of definite booleans as a balanced tree: Column→Expression
+    * conversion recurses once per level, so a left-deep fold overflows a
+    * default thread stack at a few hundred constraints.
+    */
+  private def conjunction(cs: Seq[Column]): Column = cs match {
+    case Seq()  => lit(true)
+    case Seq(c) => c
+    case _      => val (l, r) = cs.splitAt(cs.length / 2); conjunction(l) && conjunction(r)
   }
 
   /** Keyword path of a constraint in the suite document, JSON-pointer
@@ -599,9 +611,9 @@ object ConstraintCompiler {
     * instance path of the offending FIELD (element index intentionally
     * not tracked — `observed` already carries the first offending
     * element), `schema_path` the keyword path, `message` a
-    * deterministic human-readable line. The path columns are derived
-    * AFTER the explode from constraint_id via a linear coalesce-of-when
-    * (constant per cid, so the per-row verdict struct stays small).
+    * deterministic human-readable line. The path columns are looked up
+    * AFTER the explode from constraint_id in one map literal (constant
+    * per cid, so the per-row verdict struct stays small).
     *
     * `observe`: optional [[Observation]] collecting `(rows, viol)` —
     * total input rows and rows with ≥1 failure — as accumulator metrics
@@ -612,15 +624,8 @@ object ConstraintCompiler {
   def violations(df: DataFrame, suite: Suite, keyField: String = "doc_id", partField: String = "source",
                  fusedIntArrays: Set[String] = Set.empty,
                  observe: org.apache.spark.sql.Observation = null): DataFrame = {
-    // a zero-constraint suite still streams rows (the observe() rows
-    // metric must count them) but its checks array is a VOID-typed
-    // array() that the filter lambda cannot field-extract — substitute
-    // a correctly-typed always-empty array (round-4 review)
-    val checks =
-      if (suite.resolved.constraints.isEmpty)
-        array().cast("array<struct<cid:string,pass:boolean,observed:string>>")
-      else checksColumn(suite, fusedIntArrays)
-    val fails = filter(checks, c => !c("pass"))
+    // zero constraints: rows still stream (observe() counts them) past an empty checks array
+    val fails = filter(checksColumn(suite, fusedIntArrays), c => !c("pass"))
     val base = withProfiles(df, fusedIntArrays)
       .select(col(keyField), col(partField), fails.as("_fails"))
     val observed =
@@ -630,15 +635,9 @@ object ConstraintCompiler {
       else base.observe(observe,
         count(lit(1)).as("rows"),
         sum(when(size(col("_fails")) > 0, 1L).otherwise(0L)).as("viol"))
-    val fcs = suite.resolved.constraints
-    // linear per-cid constant lookup (a when/otherwise FOLD would double
-    // the tree per constraint — same codegen blowup as Ann.ivfAssign);
-    // a zero-constraint suite explodes an always-empty _fails array, so
-    // the lookup is never consulted — but coalesce() with ZERO args is
-    // an analysis error, so guard it (round-4 review)
     def byCid(v: FieldConstraint => String): Column =
-      if (fcs.isEmpty) lit(null).cast("string")
-      else coalesce(fcs.map(fc => when(col("constraint_id") === fc.id, lit(v(fc)))): _*)
+      element_at(typedLit(suite.resolved.constraints.map(fc => fc.id -> v(fc)).toMap),
+        col("constraint_id"))
     observed
       .select(col(keyField), col(partField), explode(col("_fails")).as("v"))
       .select(

@@ -106,10 +106,6 @@ object ValidateJob {
     byPart.collect { case (p, Some(st)) => p -> st }.toMap
   }
 
-  /** Read completed partitions (last line per partition wins). */
-  def completed(checkpointDir: String, hash: String): Set[String] =
-    completedDetail(checkpointDir, hash).keySet
-
   /** Recovery marker for one partition's in-flight incremental append.
     * Written just before the SaveMode.Append violations write, deleted
     * just after the manifest line lands; found at startup it means a
@@ -317,14 +313,17 @@ object ValidateJob {
     println(s"[validate] partitions=${parts.length} skip=$nSkip incremental=$nInc " +
       s"full=${parts.length - nSkip - nInc}")
 
+    // read exactly the given `name:size` fingerprinted files of one
+    // partition; basePath re-derives the partition column from the dir name
+    def readFiles(p: String, files: Seq[String]): DataFrame =
+      spark.read.option("basePath", tablePath).parquet(files.map(f =>
+        s"$tablePath/${partDirName(partitionCol, p)}/${f.takeWhile(_ != ':')}"): _*)
+
     planned.foreach {
       case (_, Skip, _) => ()
       case (p, Incremental(newFiles, prev), nowFiles) =>
         val t0 = System.currentTimeMillis()
-        val paths = newFiles.map(f =>
-          s"$tablePath/${partDirName(partitionCol, p)}/${f.takeWhile(_ != ':')}")
-        // basePath re-derives the partition column from the dir name
-        val slice = spark.read.option("basePath", tablePath).parquet(paths: _*)
+        val slice = readFiles(p, newFiles)
         // intent marker bracketing the non-idempotent append: present
         // on the next startup ⇒ the bracket didn't close ⇒ Full recovery
         val intent = intentFile(checkpointDir, p)
@@ -347,10 +346,7 @@ object ValidateJob {
         // layouts (no per-partition listing) keep the filter path; the
         // partition-pruning pushdown is identical either way.
         val slice =
-          if (nowFiles.nonEmpty)
-            spark.read.option("basePath", tablePath)
-              .parquet(nowFiles.map(f =>
-                s"$tablePath/${partDirName(partitionCol, p)}/${f.takeWhile(_ != ':')}"): _*)
+          if (nowFiles.nonEmpty) readFiles(p, nowFiles)
           else table.filter(partitionFilter(partitionCol, p))
         val (rows, viol) = validatePartition(slice, suite, outDir, p, fused)
         appendManifest(checkpointDir, ManifestEntry(p, hash, rows, viol,
@@ -361,23 +357,11 @@ object ValidateJob {
         Files.deleteIfExists(intentFile(checkpointDir, p))
     }
 
-    // verdict table from the manifest (cheap, driver-side truth)
-    val entries = completed(checkpointDir, hash)
+    // verdict table from the manifest (cheap, driver-side truth), read
+    // through the same JSON codec as the restart plan
     import spark.implicits._
-    val verdictRows = {
-      val f = Paths.get(checkpointDir, "manifest.jsonl")
-      val byPart = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
-      Files.readAllLines(f).forEach { line =>
-        val part = """"partition":"([^"]*)"""".r.findFirstMatchIn(line).map(_.group(1))
-        val rows = """"rows":(\d+)""".r.findFirstMatchIn(line).map(_.group(1).toLong)
-        val viol = """"violations":(\d+)""".r.findFirstMatchIn(line).map(_.group(1).toLong)
-        (part, rows, viol) match {
-          case (Some(p), Some(r), Some(v)) if entries(p) => byPart(p) = (r, v)
-          case _ => ()
-        }
-      }
-      byPart.toSeq.map { case (p, (r, v)) => (p, r, v, v == 0L) }
-    }
+    val verdictRows = completedDetail(checkpointDir, hash).toSeq.sortBy(_._1)
+      .map { case (p, st) => (p, st.rows, st.violations, st.violations == 0L) }
     verdictRows.toDF("partition", "rows", "violations", "pass")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$outDir/verdicts")
 
@@ -449,7 +433,8 @@ object ValidateJob {
     val table = a.getOrElse("--table", throw new IllegalArgumentException("--table required"))
     val out = a.getOrElse("--out", throw new IllegalArgumentException("--out required"))
     val ckpt = a.getOrElse("--checkpoint", s"$out/_checkpoint")
-    val cpus = a.getOrElse("--cpus", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val cpus = a.getOrElse("--cpus", sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString))
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
       .appName("graft-validate")

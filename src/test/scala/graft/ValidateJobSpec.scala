@@ -47,7 +47,7 @@ class ValidateJobSpec extends SparkSpec {
 
     // manifest complete
     val hash = ValidateJob.suiteHash(NorthStar.suite)
-    val done = ValidateJob.completed(ckpt, hash)
+    val done = ValidateJob.completedDetail(ckpt, hash).keySet
     assert(done == parts.map(_._1).toSet)
 
     // resume: second run with same checkpoint must skip all partitions
@@ -328,6 +328,21 @@ class ValidateJobSpec extends SparkSpec {
     }
   }
 
+  test("a partition value with a quote and a backslash keeps its verdict row") {
+    val table = tmp("qt"); val out = tmp("qtout"); val ckpt = tmp("qtckpt")
+    val odd = "we\"b\\x"
+    val df = TokenData.tokenTable(spark, 2000, 4)
+      .withColumn("source", when(col("source") === "web", lit(odd)).otherwise(col("source")))
+    new PartitionedParquetIO("source").write(df, table)
+    ValidateJob.run(spark, table, out, ckpt)
+    val verdicts = spark.read.parquet(s"$out/verdicts").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq
+    val parts = ValidateJob.listPartitions(spark, table, "source")
+    assert(parts.contains(odd), s"partitions: $parts")
+    assert(verdicts.map(_._1).sorted == parts.sorted, s"verdict rows: $verdicts")
+    assert(verdicts.map(_._2).sum == spark.read.parquet(table).count())
+  }
+
   test("NULL partition values are validated via the Hive sentinel, not silently skipped") {
     import spark.implicits._
     val table = tmp("nullp"); val out = tmp("nullpout"); val ckpt = tmp("nullpckpt")
@@ -462,6 +477,6 @@ class ValidateJobSpec extends SparkSpec {
     ValidateJob.run(spark, table, out, ckpt)
     val otherSuite = NorthStar.suite.copy(name = "other",
       constraints = NorthStar.suite.constraints.take(2))
-    assert(ValidateJob.completed(ckpt, ValidateJob.suiteHash(otherSuite)).isEmpty)
+    assert(ValidateJob.completedDetail(ckpt, ValidateJob.suiteHash(otherSuite)).keySet.isEmpty)
   }
 }
